@@ -85,7 +85,7 @@ import json, os, shutil, sys, tempfile, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from engine import corpus, tablefmt
-from engine.ops.cluster import cluster, cluster_grouped
+from engine.ops.cluster import cluster
 from engine.ops.compact import compact
 from engine.ops.merge import merge_into
 from engine.session import get_spark
@@ -104,8 +104,8 @@ n_files = int(sys.argv[4])
 # amortizes the same variance over 4 waves — an artifact that
 # UNDERSTATES 4N scaling.
 SHUF = int(os.environ.get("SCALE_SHUF", "32"))
-# >0: cluster phase uses cluster_grouped with this per-group input bound
-# (MB) — the bounded-shuffle partial-progress path; 0 = single-shot.
+# >0: the cluster phase bounds each rewrite group to this many MB of
+# input — the bounded-shuffle partial-progress path; 0 = one group.
 GROUP_MB = int(os.environ.get("SCALE_GROUP_MB", "0"))
 APPEND_FILES = int(os.environ.get("SCALE_APPEND_FILES", "32"))
 MERGE_FILES = int(os.environ.get("SCALE_MERGE_FILES", "64"))
@@ -197,9 +197,9 @@ try:
         ph["compact"] = time.monotonic() - tm
         tm = time.monotonic()
         if GROUP_MB > 0:
-            cluster_grouped(spark, t, curve="zorder",
-                            max_group_bytes=GROUP_MB * 1024 * 1024,
-                            target_file_bytes=16 * 1024 * 1024)
+            cluster(spark, t, curve="zorder",
+                    max_group_bytes=GROUP_MB * 1024 * 1024,
+                    num_files=max(1, round(t.total_bytes() / (16 * 1024 * 1024))))
         else:
             cluster(spark, t, curve="zorder", num_files=cluster_files)
         ph["cluster"] = time.monotonic() - tm
@@ -228,7 +228,7 @@ try:
           flush=True)
 
     from engine.ops.cluster import _zkey_udf
-    _keyf = _zkey_udf("zorder", ["m"], ["m"])
+    _keyf = _zkey_udf("zorder", ["m"], ["m"], [])
 
     for line in sys.stdin:
         cmd = line.strip()

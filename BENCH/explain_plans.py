@@ -21,7 +21,6 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from engine import corpus, tablefmt  # noqa: E402
-from engine.ops.cluster import with_curve_key  # noqa: E402
 from engine.queries import QUERIES  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 from engine.tablefmt import Table  # noqa: E402

@@ -168,7 +168,7 @@ try:
     print(json.dumps({{"ready": cores}}), flush=True)
 
     from engine.ops.cluster import _zkey_udf
-    _keyf = _zkey_udf("zorder", ["m"], ["m"])
+    _keyf = _zkey_udf("zorder", ["m"], ["m"], [])
 
     for line in sys.stdin:
         cmd = line.strip()

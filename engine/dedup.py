@@ -800,7 +800,10 @@ def simhash_near_dups_against(
     and the banded Hamming verify by ``dedup_simhash``; their
     composition is pytest-pinned against a naive cross-join.
 
-    Returns (doc_a = index id, doc_b = batch id, hamming), distinct.
+    Returns (doc_a = index id, doc_b = batch id, hamming): one row per
+    matching (index row, batch row) pair, kept at its first shared band
+    rather than by a distinct — so the pairs are distinct when ``doc_id``
+    is unique in the index and ``id_col`` in the batch.
     """
     n_bands = max(n_bands, max_hamming + 1)
     width = BITS // n_bands
@@ -861,14 +864,16 @@ def minhash_near_dups_against(
     equi-join on the short band keys — a plain join (not the
     collect_list shape), so AQE's skew handling splits a hot bucket;
     the matching-component Jaccard estimate is computed map-side from
-    the signature arrays carried through the join, and only pairs
-    clearing ``threshold`` reach the cross-band distinct.  Within-batch
-    near-dups are NOT emitted (that is the self-sweep's job); run
-    ``minhash_near_dups`` on the batch first if batch-internal dedup is
-    also needed.
+    the signature arrays carried through the join, and each pair is
+    kept once, at its first matching band, when it clears
+    ``threshold``.  Within-batch near-dups are NOT emitted (that is the
+    self-sweep's job); run ``minhash_near_dups`` on the batch first if
+    batch-internal dedup is also needed.
 
-    Returns (doc_a = index id, doc_b = batch id, est_jaccard),
-    distinct.
+    Returns (doc_a = index id, doc_b = batch id, est_jaccard): one row
+    per matching (index row, batch row) pair, with no distinct — so the
+    pairs are distinct when ``doc_id`` is unique in the index and
+    ``id_col`` in the batch.
     """
     bsigs = minhash_signatures(df, id_col, text_col)
     ib = index_sigs.select(

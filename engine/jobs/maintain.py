@@ -85,8 +85,9 @@ def main(argv: list[str] | None = None) -> int:
         "--max-group-mb", type=int, default=None,
         help="cluster: bound each rewrite job to this many MB of input "
              "files (Iceberg max-file-group-size-bytes analog) with a "
-             "partial-progress commit per group; omit for the "
-             "single-shuffle whole-table rewrite",
+             "partial-progress commit per group; omit to rewrite the "
+             "whole table as one group in one shuffle (output file "
+             "count: --num-files, else table size / --target-mb)",
     )
     p.add_argument("--num-files", type=int, default=None)
     p.add_argument("--master", default=None)
@@ -194,19 +195,18 @@ def main(argv: list[str] | None = None) -> int:
             files_per_s=round(r.files_per_s, 1),
         )
     elif args.op == "cluster":
-        if args.max_group_mb:
-            from ..ops.cluster import cluster_grouped
+        from ..ops.cluster import cluster
 
-            r = cluster_grouped(
-                spark, table, curve=args.curve,
-                max_group_bytes=args.max_group_mb * 1024 * 1024,
-                target_file_bytes=args.target_mb * 1024 * 1024,
-                job_id=args.job_id,
-            )
-        else:
-            from ..ops.cluster import cluster
-
-            r = cluster(spark, table, curve=args.curve, num_files=args.num_files)
+        r = cluster(
+            spark, table, curve=args.curve,
+            num_files=args.num_files or max(
+                1, round(table.total_bytes() / (args.target_mb * 1024 * 1024))
+            ),
+            max_group_bytes=(
+                args.max_group_mb * 1024 * 1024 if args.max_group_mb else None
+            ),
+            job_id=args.job_id,
+        )
         out.update(
             curve=r.curve, files_in=r.files_in, files_out=r.files_out,
             rows=r.rows, snapshot_id=r.snapshot_id, seconds=round(r.duration_s, 2),

@@ -224,9 +224,12 @@ def sweep_orphan_files(
             d = os.path.join(table.root, name)
             if now - os.path.getmtime(d) < min_age_s:
                 continue
-            for f in os.listdir(d):
-                reclaimed += os.path.getsize(os.path.join(d, f))
-                n += 1
+            # cluster/compact stages nest part files under zbin=*/ and
+            # bin_id=*/ partition dirs: count the files, not the dirs
+            for dirpath, _, files in os.walk(d):
+                for f in files:
+                    reclaimed += os.path.getsize(os.path.join(dirpath, f))
+                    n += 1
             shutil.rmtree(d, ignore_errors=True)
     return n, reclaimed
 

@@ -362,7 +362,6 @@ class Table:
         df: DataFrame,
         partition: str = "",
         num_files: int | None = None,
-        sort_within: list[str] | None = None,
     ) -> list[DataFile]:
         """Materialize df as immutable parquet data files (no commit yet).
 
@@ -374,8 +373,6 @@ class Table:
         df = df.select(*cols)
         if num_files is not None:
             df = df.repartition(num_files)
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
         stage = os.path.join(self.root, f"_stage-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(stage)
         parts = sorted(
@@ -462,7 +459,6 @@ class Table:
         removed_paths: set[str] | None = None,
         summary: dict | None = None,
         expected_parent: int | None = None,
-        group_added_by_partition: bool = True,
     ) -> Snapshot:
         """Optimistic snapshot commit: keep surviving manifests as-is
         (manifest reuse, like Iceberg), drop removed entries, add new
@@ -488,15 +484,11 @@ class Table:
                     )
                 )
             # else: manifest fully removed
-        if added:
-            if group_added_by_partition:
-                by_part: dict[str, list[DataFile]] = {}
-                for e in added:
-                    by_part.setdefault(e.partition, []).append(e)
-                for part, entries in sorted(by_part.items()):
-                    manifests.append(self._write_manifest(entries, part))
-            else:
-                manifests.append(self._write_manifest(added))
+        by_part: dict[str, list[DataFile]] = {}
+        for e in added:
+            by_part.setdefault(e.partition, []).append(e)
+        for part, entries in sorted(by_part.items()):
+            manifests.append(self._write_manifest(entries, part))
         return self._commit_snapshot(
             parent + 1, parent, operation, manifests, summary or {}
         )

@@ -10,8 +10,9 @@ from engine import corpus, tablefmt
 from engine.ops.cluster import (
     _hilbert_d_np,
     _interleave_bits_np,
-    _sample_boundaries,
+    _sample_boundaries_pairs,
     cluster,
+    plan_cluster_groups,
 )
 from engine.tablefmt import Table
 
@@ -97,7 +98,7 @@ def test_cluster_improves_pruning(spark, tmp_path):
 
 def test_sample_boundaries_order(spark):
     df = corpus.generate_corpus(spark, n_files=300, n_repos=6, partitions=4)
-    b = _sample_boundaries(df, "repo", bits=3)
+    b = _sample_boundaries_pairs(df, ["repo"], bits=3)[0]["repo"]
     assert b == sorted(b)
     assert len(b) <= 7
 
@@ -112,8 +113,7 @@ def test_zbin_routing_scales_to_many_files(spark):
 
     rng = np.random.default_rng(7)
     boundaries = np.unique(rng.integers(0, 2**31, size=10_000)).tolist()
-    # a plain-zkey UDF and the fused variant must agree on zkey; the
-    # fused variant's zbin must equal the reference count semantics
+    # the fused UDF's zbin must equal the reference count semantics
     keyf = _zkey_udf("zorder", ["b", "d"], ["m", "t"], zbin_boundaries=boundaries)
     df = spark.createDataFrame(
         [(chr(97 + i % 5), f"p{i}") for i in range(2000)], "repo string, path string"
@@ -136,21 +136,20 @@ def test_cluster_grouped_preserves_content_and_bounds_groups(spark, tmp_path):
     """Grouped rewrite: content digest unchanged, every group's input
     bytes bounded, per-group commits land (snapshot count grows by
     #groups), and pruning improves like the single-shot path."""
-    from engine.ops.cluster import cluster_grouped, plan_cluster_groups
-
     t = Table.create(str(tmp_path / "t"))
     df = corpus.generate_corpus(spark, n_files=1200, n_repos=10, partitions=8)
     tablefmt.append(spark, t, df.repartition(12), num_files=12)
     digest = corpus.corpus_digest(t.scan(spark))
     entries = t.files()
-    cap = sum(e.bytes for e in entries) // 3  # force ~4 groups
+    total = sum(e.bytes for e in entries)
+    cap = total // 3  # force ~4 groups
     groups = plan_cluster_groups(entries, cap)
     assert len(groups) >= 3
     assert all(sum(e.bytes for e in g) <= cap or len(g) == 1 for g in groups)
     snaps_before = len(t.snapshot_ids())
-    r = cluster_grouped(
+    r = cluster(
         spark, t, curve="zorder", max_group_bytes=cap,
-        target_file_bytes=256 * 1024,
+        num_files=round(total / (256 * 1024)),
     )
     assert corpus.corpus_digest(t.scan(spark)) == digest
     assert len(t.snapshot_ids()) == snaps_before + len(groups)
@@ -163,23 +162,22 @@ def test_cluster_grouped_resumes_after_crash(spark, tmp_path):
     """Crash after the first group: completed groups' commits survive;
     resuming the same job_id finishes only the remaining groups and the
     final content digest is intact."""
-    from engine.ops.cluster import cluster_grouped
-
     t = Table.create(str(tmp_path / "t"))
     df = corpus.generate_corpus(spark, n_files=900, n_repos=6, partitions=6)
     tablefmt.append(spark, t, df.repartition(9), num_files=9)
     digest = corpus.corpus_digest(t.scan(spark))
-    cap = sum(e.bytes for e in t.files()) // 3
+    total = sum(e.bytes for e in t.files())
+    cap = total // 3
     with pytest.raises(RuntimeError, match="simulated crash"):
-        cluster_grouped(
-            spark, t, max_group_bytes=cap, target_file_bytes=256 * 1024,
+        cluster(
+            spark, t, max_group_bytes=cap, num_files=round(total / (256 * 1024)),
             job_id="job-crash", fail_after_groups=1,
         )
     # partial progress is durable and readable
     assert corpus.corpus_digest(t.scan(spark)) == digest
     mid_snaps = len(t.snapshot_ids())
-    r = cluster_grouped(
-        spark, t, max_group_bytes=cap, target_file_bytes=256 * 1024,
+    r = cluster(
+        spark, t, max_group_bytes=cap, num_files=round(total / (256 * 1024)),
         job_id="job-crash",
     )
     assert corpus.corpus_digest(t.scan(spark)) == digest
@@ -199,16 +197,16 @@ def test_cluster_grouped_clean_without_infos_redoes_not_empty_commit(
     REDONE on resume, never committed as an empty file list against live
     inputs — that would remove the group's rows with nothing added."""
     from engine.checkpoint import Ledger
-    from engine.ops.cluster import cluster_grouped
 
     t = Table.create(str(tmp_path / "t"))
     df = corpus.generate_corpus(spark, n_files=600, n_repos=4, partitions=4)
     tablefmt.append(spark, t, df.repartition(6), num_files=6)
     digest = corpus.corpus_digest(t.scan(spark))
-    cap = sum(e.bytes for e in t.files()) // 3
+    total = sum(e.bytes for e in t.files())
+    cap = total // 3
     with pytest.raises(RuntimeError, match="simulated crash"):
-        cluster_grouped(
-            spark, t, max_group_bytes=cap, target_file_bytes=256 * 1024,
+        cluster(
+            spark, t, max_group_bytes=cap, num_files=round(total / (256 * 1024)),
             job_id="job-hazard", fail_after_groups=1,
         )
     # forge the hazard state: first PENDING unit becomes clean with live
@@ -220,8 +218,8 @@ def test_cluster_grouped_clean_without_infos_redoes_not_empty_commit(
     forged.state = "clean"
     forged.meta.pop("file_infos", None)
     led.save()
-    r = cluster_grouped(
-        spark, t, max_group_bytes=cap, target_file_bytes=256 * 1024,
+    r = cluster(
+        spark, t, max_group_bytes=cap, num_files=round(total / (256 * 1024)),
         job_id="job-hazard",
     )
     assert corpus.corpus_digest(t.scan(spark)) == digest  # no rows lost
@@ -234,22 +232,21 @@ def test_cluster_grouped_resume_does_not_rewrite_committed_groups(
     """Resume reuses the persisted plan: output files of groups committed
     before the crash survive untouched (no proportional redo), and the
     returned counters cover committed + resumed groups."""
-    from engine.ops.cluster import cluster_grouped
-
     t = Table.create(str(tmp_path / "t"))
     df = corpus.generate_corpus(spark, n_files=900, n_repos=6, partitions=6)
     tablefmt.append(spark, t, df.repartition(9), num_files=9)
     digest = corpus.corpus_digest(t.scan(spark))
     n_inputs = len(t.files())
-    cap = sum(e.bytes for e in t.files()) // 3
+    total = sum(e.bytes for e in t.files())
+    cap = total // 3
     with pytest.raises(RuntimeError, match="simulated crash"):
-        cluster_grouped(
-            spark, t, max_group_bytes=cap, target_file_bytes=256 * 1024,
+        cluster(
+            spark, t, max_group_bytes=cap, num_files=round(total / (256 * 1024)),
             job_id="job-keep", fail_after_groups=1,
         )
     after_crash = {e.path for e in t.files()}
-    r = cluster_grouped(
-        spark, t, max_group_bytes=cap, target_file_bytes=256 * 1024,
+    r = cluster(
+        spark, t, max_group_bytes=cap, num_files=round(total / (256 * 1024)),
         job_id="job-keep",
     )
     final = {e.path for e in t.files()}
@@ -259,3 +256,87 @@ def test_cluster_grouped_resume_does_not_rewrite_committed_groups(
     assert pre_crash_outputs, "committed group's outputs were rewritten on resume"
     assert corpus.corpus_digest(t.scan(spark)) == digest
     assert r.files_in == n_inputs  # counters fold committed + resumed
+
+
+def _merged_fixture(spark, tmp_path):
+    """600 rows in 6 files, with the version column merge deltas need."""
+    t = Table.create(str(tmp_path / "t"))
+    base = corpus.generate_corpus(
+        spark, n_files=600, n_repos=4, partitions=4, version_col=True
+    )
+    tablefmt.append(spark, t, base.repartition(6), num_files=6)
+    return t, base
+
+
+def _assert_one_row_per_key(spark, t, n):
+    df = t.scan(spark)
+    assert df.count() == n
+    assert df.select("repo", "path").distinct().count() == n
+
+
+def test_cluster_group_commit_conflicts_with_concurrent_merge(
+    spark, tmp_path, monkeypatch
+):
+    """A merge that lands while the first of 3 groups is being rewritten
+    makes that group's commit raise CommitConflict.  Committing anyway
+    would put the merged file's old rows back next to the merge's
+    rewrite of them (700 rows for 600 keys)."""
+    from engine.ops import cluster as cluster_mod
+    from engine.ops.merge import merge_into
+    from engine.tablefmt import CommitConflict
+
+    t, base = _merged_fixture(spark, tmp_path)
+    cap = sum(e.bytes for e in t.files()) * 2 // 5  # 2 of the 6 files
+    assert len(plan_cluster_groups(t.files(), cap)) == 3
+    real_rewrite = cluster_mod._rewrite_clustered
+    merged = []
+
+    def rewrite_with_concurrent_merge(spark_, table, df, *args):
+        out = real_rewrite(spark_, table, df, *args)
+        if not merged:
+            k = df.select("repo", "path").orderBy("repo", "path").first()
+            row = base.filter((F.col("repo") == k.repo) & (F.col("path") == k.path))
+            merged.append(merge_into(spark, Table.load(t.root), corpus.bump_versions(row)))
+        return out
+
+    monkeypatch.setattr(cluster_mod, "_rewrite_clustered", rewrite_with_concurrent_merge)
+    with pytest.raises(CommitConflict):
+        cluster(spark, t, max_group_bytes=cap, num_files=6)
+    assert merged[0].rows_updated == 1
+    _assert_one_row_per_key(spark, t, 600)
+
+
+def test_cluster_resume_redoes_group_whose_inputs_changed(
+    spark, tmp_path, monkeypatch
+):
+    """Crash between a group's mark_clean and its commit, then a merge
+    rewrites one of the group's input files: resume must redo the group
+    from its live inputs, not commit the recorded outputs, which still
+    hold the merged key's old row."""
+    from engine.checkpoint import Ledger
+    from engine.ops.merge import merge_into
+
+    t, base = _merged_fixture(spark, tmp_path)
+    real_commit = Table.commit
+    crashed = []
+
+    def commit_crashing_once(self, operation, *args, **kwargs):
+        if operation == "cluster" and not crashed:
+            crashed.append(operation)
+            raise RuntimeError("simulated crash before the group commit")
+        return real_commit(self, operation, *args, **kwargs)
+
+    monkeypatch.setattr(Table, "commit", commit_crashing_once)
+    with pytest.raises(RuntimeError, match="before the group commit"):
+        cluster(spark, t, num_files=3, job_id="job-stale")
+    assert [u.state for u in Ledger.open(t.root, "job-stale").units.values()] == [
+        "clean"
+    ]
+    delta = corpus.bump_versions(base.orderBy("repo", "path").limit(1))
+    assert merge_into(spark, t, delta).rows_updated == 1
+    cluster(spark, t, num_files=3, job_id="job-stale")
+    _assert_one_row_per_key(spark, t, 600)
+    expected = base.join(delta.select("repo", "path"), ["repo", "path"], "left_anti")
+    assert corpus.corpus_digest(t.scan(spark)) == corpus.corpus_digest(
+        expected.unionByName(delta)
+    )

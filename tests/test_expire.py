@@ -61,6 +61,20 @@ def test_orphan_sweep_reclaims_uncommitted(spark, tmp_path):
     assert t.scan(spark).count() == 50
 
 
+def test_orphan_sweep_counts_partitioned_stage_files(tmp_path):
+    """A crashed cluster/compact stage nests its part files under
+    partition dirs (zbin=*/, bin_id=*/): the sweep reports the files
+    and their bytes, not the directory entries at the stage's top."""
+    t = Table.create(str(tmp_path / "t"))
+    stage = os.path.join(t.root, "_stage-crashed")
+    os.makedirs(os.path.join(stage, "zbin=0"))
+    with open(os.path.join(stage, "zbin=0", "part-00000.parquet"), "wb") as f:
+        f.write(b"\0" * 10_000)
+    open(os.path.join(stage, "_SUCCESS"), "wb").close()
+    assert sweep_orphan_files(t, min_age_s=0) == (2, 10_000)
+    assert not os.path.exists(stage)
+
+
 def test_sweep_protects_ledger_outputs(spark, tmp_path):
     """Outputs recorded in an active checkpoint ledger survive a sweep
     even with min_age_s=0 — an in-flight resumable job's files must not

@@ -37,6 +37,32 @@ def test_maintain_cli_pipeline(spark, tmp_path, capsys):
     assert out["rows_updated"] == 3 and out["rows_inserted"] == 0
 
 
+def test_maintain_cli_grouped_cluster(spark, tmp_path, capsys):
+    """--op cluster --max-group-mb: one commit per bounded file group,
+    content unchanged (verify's digest before == after)."""
+    from engine.ops.cluster import plan_cluster_groups
+
+    root = str(tmp_path / "t")
+    src = str(tmp_path / "src")
+    corpus.generate_corpus(spark, n_files=3000, n_repos=4, partitions=4).write.parquet(src)
+    assert main(["--table", root, "--op", "create"]) == 0
+    assert main(["--table", root, "--op", "append", "--input", src, "--num-files", "8"]) == 0
+    assert main(["--table", root, "--op", "verify"]) == 0
+    t = Table.load(root)
+    n_groups = len(plan_cluster_groups(t.files(), 1024 * 1024))
+    assert n_groups > 1
+    snaps_before = len(t.snapshot_ids())
+    assert main(["--table", root, "--op", "cluster", "--max-group-mb", "1",
+                 "--target-mb", "1"]) == 0
+    assert main(["--table", root, "--op", "verify"]) == 0
+
+    lines = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
+    before, after = lines[2], lines[4]
+    assert lines[3]["op"] == "cluster" and lines[3]["files_in"] == 8
+    assert (after["rows"], after["content_digest"]) == (3000, before["content_digest"])
+    assert len(t.snapshot_ids()) == snaps_before + n_groups
+
+
 def test_dedup_sweep_cli(spark, tmp_path, capsys):
     """dedup_sweep end-to-end: exact star-pairs, drops, keep, and the
     minhash path, through the spark-submit main()."""

@@ -221,8 +221,6 @@ def test_driver_collect_bounded_by_touched_files(spark, base, tmp_path):
     touched files — NOT 4 x candidate-file groups (VERDICT r2 'What's
     wrong' #3).  Many candidate files, one updated: the driver sees
     <= 4 + 1 rows, flat in candidate count."""
-    from engine.ops import merge as merge_mod
-
     t = Table.create(str(tmp_path / "many"))
     # 40 candidate files, only one of which will contain the updated key
     tablefmt.append(spark, t, base, num_files=40)
@@ -230,4 +228,4 @@ def test_driver_collect_bounded_by_touched_files(spark, base, tmp_path):
     r = merge_into(spark, t, delta)
     assert r.counts == (0, 1, 0)
     assert r.files_rewritten == 1
-    assert merge_mod._last_driver_rows_collected <= 4 + r.files_rewritten
+    assert t.snapshot().summary["driver_rows_collected"] <= 4 + r.files_rewritten
